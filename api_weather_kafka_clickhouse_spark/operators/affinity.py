@@ -922,11 +922,14 @@ def _bfs_layer_ctes() -> str:
     "layer — the reachability/blast-radius primitive (which parts "
     "and suppliers are within k hops of a recalled supplier set). "
     "Each hop is ONE shuffle equi-join of the edge list on the "
-    "frontier, a distinct, and a left-anti join against the visited "
-    "set; K hops = K static joins with no driver loop state. "
-    "Frontier and visited sets persist per level and release at the "
-    "end (the pagerank/MMR lazy-chain discipline — an unpersisted "
-    "level re-derives every prior level through the plan). Node ids, "
+    "previous layer's frontier, then ONE min(layer) hash aggregate "
+    "per node over the labels so far plus the newly reached nodes "
+    "tagged with this hop — a node keeps the smallest layer it was "
+    "reached at, so no separate distinct or visited-set anti-join is "
+    "needed; K hops = K static joins with no driver loop state. "
+    "Each hop's labels persist and release at the end (the "
+    "pagerank/MMR lazy-chain discipline — an unpersisted level "
+    "re-derives every prior level through the plan). Node ids, "
     "layers, and the seed predicate are exact integers; first-"
     "reached semantics make the result set-unique, so the whole "
     "layer assignment hash-checks.",

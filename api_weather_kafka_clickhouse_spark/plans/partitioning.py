@@ -25,10 +25,13 @@ selectivity) — cheap driver-side plan stats, no job.
 
 from __future__ import annotations
 
+import logging
 import math
 import os
 
 from pyspark.sql import DataFrame
+
+log = logging.getLogger(__name__)
 
 # Per-partition input-byte target for a pre-explode exchange. 64 MB of
 # NARROW pre-explode rows is conservative: the explode typically
@@ -62,7 +65,11 @@ def fanout_partitions(df: DataFrame, target_bytes: int | None = None) -> int:
     try:
         # Catalyst BigInt -> str -> int (py4j has no BigInt coercion)
         est = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
-    except Exception:  # pragma: no cover — Connect/estimation failure
+    except Exception:  # Connect (no _jdf) or estimation failure
+        log.warning(
+            "fanout_partitions: size estimate unavailable, using the core "
+            "count %d", par, exc_info=True,
+        )
         return par
     if est <= 0 or est >= _UNKNOWN_ESTIMATE:
         return par

@@ -39,6 +39,8 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
+from ..streaming.store import hadoop_fs
+
 log = logging.getLogger(__name__)
 
 _STAGE_ROOT: str | None = None
@@ -78,9 +80,8 @@ def _delete_path(spark, path: str) -> None:
     session can write, not just local POSIX). Raises on FS errors; a
     missing path is a silent success (Hadoop delete returns false
     without throwing — the dir is gone either way)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    p.getFileSystem(spark._jsc.hadoopConfiguration()).delete(p, True)
+    fs, p = hadoop_fs(spark, path)
+    fs.delete(p, True)
 
 
 def _remove(df: DataFrame, path: str) -> None:

@@ -111,27 +111,82 @@ def jdbc_insert(df: DataFrame, url: str, table: str, properties: dict | None = N
     writer.save()
 
 
-def _leaf_partition_dirs(fs, jvm, base: str) -> list:  # noqa: ANN001 (JVM objects)
-    """Directories under ``base`` that directly hold data files — the
-    Hive leaf partitions, at any nesting depth (event_month=N, or
-    batch_id=N/event_month=M from write_fact_batch)."""
-    leaves = []
-    stack = [jvm.org.apache.hadoop.fs.Path(base)]
+def _leaf_partitions(spark: SparkSession, path: str):
+    """Yield ``(leaf, rel, data_files)`` for every directory under
+    ``path`` that directly holds data files — the Hive leaf
+    partitions, at any nesting depth (event_month=N, or
+    batch_id=N/event_month=M from write_fact_batch). ``leaf`` is the
+    scheme-qualified path string, ``rel`` its path relative to the
+    table (``""`` for an unpartitioned table), ``data_files`` its
+    FileStatus list minus ``_``/``.`` metadata files. A missing table
+    yields nothing.
+
+    Every directory is listed before any leaf under it is yielded,
+    so a caller may rewrite, rename or drop the leaf it was handed;
+    the transient siblings a rewrite creates are never walked."""
+    # function-level: streaming/ imports this module at package init
+    from ..streaming.store import hadoop_fs
+
+    fs, base = hadoop_fs(spark, path)
+    if not fs.exists(base):
+        return
+    # listStatus returns scheme-qualified paths ("file:/..."); qualify
+    # the base the same way so relative names slice correctly
+    base_q = fs.makeQualified(base).toString()
+    stack = [base]
     while stack:
         p = stack.pop()
-        subdirs, has_data = [], False
+        subdirs, files = [], []
         for s in fs.listStatus(p):
-            name = s.getPath().getName()
-            if name.startswith(("_", ".")):
+            if s.getPath().getName().startswith(("_", ".")):
                 continue
-            if s.isDirectory():
-                subdirs.append(s.getPath())
-            else:
-                has_data = True
-        if has_data:
-            leaves.append(p)
-        stack.extend(subdirs)
-    return leaves
+            (subdirs if s.isDirectory() else files).append(s)
+        stack.extend(s.getPath() for s in subdirs)
+        if files:
+            leaf = fs.makeQualified(p).toString()
+            yield leaf, leaf[len(base_q) :].lstrip("/"), files
+
+
+def _rewrite_matching(spark: SparkSession, path: str, matched, kept) -> dict[str, int]:
+    """The match-then-rewrite loop behind delete_fact and upsert_fact:
+    per leaf partition, count the rows ``matched(df)`` selects and,
+    when there are any, rewrite the partition to ``kept(df)``
+    re-sorted on the table sort key, through the shared crash-safe
+    tmp/marker/aside swap (streaming/store.crash_safe_rewrite). Both
+    filters see the leaf's rows WITH its Hive partition columns
+    re-derived from the dir path (a direct leaf read loses them), so
+    predicates like ``event_month = N`` resolve; they are dropped
+    again before the write — the layout carries them. Returns
+    {relative partition dir: matched rows} for rewritten partitions."""
+    from ..streaming.store import crash_safe_rewrite
+
+    out: dict[str, int] = {}
+    for leaf, rel, _ in _leaf_partitions(spark, path):
+        part_cols = [seg.split("=", 1) for seg in rel.split("/") if "=" in seg]
+
+        def read_leaf() -> DataFrame:
+            df = spark.read.parquet(leaf)
+            for name, value in part_cols:
+                lit = F.lit(int(value)) if value.lstrip("-").isdigit() else F.lit(value)
+                df = df.withColumn(name, lit)
+            return df
+
+        n = matched(read_leaf()).count()
+        if n == 0:
+            continue
+
+        def write_kept(tmp: str) -> None:
+            (
+                kept(read_leaf())
+                .drop(*[name for name, _ in part_cols])
+                .sortWithinPartitions(*SORT_KEY)
+                .write.mode("overwrite")
+                .parquet(tmp)
+            )
+
+        if crash_safe_rewrite(spark, leaf, write_kept):
+            out[rel] = n
+    return out
 
 
 def optimize_fact(
@@ -164,39 +219,23 @@ def optimize_fact(
 
     from ..streaming.store import crash_safe_rewrite
 
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    base = jvm.org.apache.hadoop.fs.Path(path)
-    fs = base.getFileSystem(conf)
-    if not fs.exists(base):
-        return {}
-    # listStatus returns scheme-qualified paths ("file:/..."); qualify
-    # the base the same way so relative names slice correctly
-    base_q = fs.makeQualified(base).toString()
     merged: dict[str, int] = {}
-    for leaf in _leaf_partition_dirs(fs, jvm, path):
-        files = [
-            s
-            for s in fs.listStatus(leaf)
-            if not s.isDirectory() and not s.getPath().getName().startswith(("_", "."))
-        ]
+    for leaf, rel, files in _leaf_partitions(spark, path):
         total = sum(s.getLen() for s in files)
         target_n = max(1, math.ceil(total / target_file_bytes))
         if len(files) <= target_n:
             continue
-        leaf_str = leaf.toString()
 
-        def _write_merged(tmp: str, _leaf: str = leaf_str, _n: int = target_n) -> None:
+        def write_merged(tmp: str) -> None:
             (
-                spark.read.parquet(_leaf)
-                .coalesce(_n)
+                spark.read.parquet(leaf)
+                .coalesce(target_n)
                 .sortWithinPartitions(*SORT_KEY)
                 .write.mode("overwrite")
                 .parquet(tmp)
             )
 
-        if crash_safe_rewrite(spark, leaf_str, _write_merged):
-            rel = leaf_str[len(base_q) :].lstrip("/")
+        if crash_safe_rewrite(spark, leaf, write_merged):
             merged[rel] = len(files)
     return merged
 
@@ -226,10 +265,6 @@ def delete_fact(spark: SparkSession, path: str, predicate) -> dict[str, int]:
     (a valid zero-row parquet table), mirroring ClickHouse's empty
     part rather than surprising readers with a vanished directory.
     """
-    from pyspark.sql import functions as F  # noqa: F811
-
-    from ..streaming.store import crash_safe_rewrite
-
     cond = F.expr(predicate) if isinstance(predicate, str) else predicate
     # SQL DELETE semantics: a predicate evaluating NULL means NOT
     # matched — the row is KEPT. A bare filter(~cond) would silently
@@ -238,48 +273,9 @@ def delete_fact(spark: SparkSession, path: str, predicate) -> dict[str, int]:
     # here: NULL -> FALSE before both the match count and the keep
     # side use it.
     cond = F.coalesce(cond, F.lit(False))
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    base = jvm.org.apache.hadoop.fs.Path(path)
-    fs = base.getFileSystem(conf)
-    if not fs.exists(base):
-        return {}
-    base_q = fs.makeQualified(base).toString()
-    deleted: dict[str, int] = {}
-    for leaf in _leaf_partition_dirs(fs, jvm, path):
-        leaf_str = leaf.toString()
-        rel = fs.makeQualified(leaf).toString()[len(base_q) :].lstrip("/")
-        # a direct leaf read loses the Hive partition columns; re-derive
-        # them from the dir path so predicates like event_month = N
-        # resolve (they are constants per leaf), then drop them before
-        # writing back — the layout carries them
-        part_cols = [
-            seg.split("=", 1) for seg in rel.split("/") if "=" in seg
-        ]
-
-        def _with_parts(df: DataFrame) -> DataFrame:
-            for name, value in part_cols:
-                lit = F.lit(int(value)) if value.lstrip("-").isdigit() else F.lit(value)
-                df = df.withColumn(name, lit)
-            return df
-
-        n = _with_parts(spark.read.parquet(leaf_str)).filter(cond).count()
-        if n == 0:
-            continue
-
-        def _write_kept(tmp: str, _leaf: str = leaf_str) -> None:
-            (
-                _with_parts(spark.read.parquet(_leaf))
-                .filter(~cond)
-                .drop(*[name for name, _ in part_cols])
-                .sortWithinPartitions(*SORT_KEY)
-                .write.mode("overwrite")
-                .parquet(tmp)
-            )
-
-        if crash_safe_rewrite(spark, leaf_str, _write_kept):
-            deleted[rel] = n
-    return deleted
+    return _rewrite_matching(
+        spark, path, lambda df: df.filter(cond), lambda df: df.filter(~cond)
+    )
 
 
 def upsert_fact(spark: SparkSession, path: str, updates: DataFrame, keys: tuple[str, ...]) -> dict[str, int]:
@@ -319,7 +315,6 @@ def upsert_fact(spark: SparkSession, path: str, updates: DataFrame, keys: tuple[
     twin; streaming/scd2_ingest the incremental one).
     """
     from ..operators.bloom import _bits_literal, bloom_member, build_bloom_bits
-    from ..streaming.store import crash_safe_rewrite
 
     # canonical join-key fingerprint: unit-separator-joined string
     # forms; concat_ws never yields NULL, so the probe is always a
@@ -333,52 +328,14 @@ def upsert_fact(spark: SparkSession, path: str, updates: DataFrame, keys: tuple[
         else:
             bits = _bits_literal(build_bloom_bits(key_df.select(gram.alias("gram"))))
             probe = bloom_member(gram, bits)
-
-            jvm = spark._jvm
-            conf = spark._jsc.hadoopConfiguration()
-            base = jvm.org.apache.hadoop.fs.Path(path)
-            fs = base.getFileSystem(conf)
-            replaced = {}
-            if fs.exists(base):
-                base_q = fs.makeQualified(base).toString()
-                for leaf in _leaf_partition_dirs(fs, jvm, path):
-                    leaf_str = leaf.toString()
-                    rel = fs.makeQualified(leaf).toString()[len(base_q):].lstrip("/")
-                    part_cols = [seg.split("=", 1) for seg in rel.split("/") if "=" in seg]
-
-                    def _with_parts(df: DataFrame) -> DataFrame:
-                        for name, value in part_cols:
-                            lit = (
-                                F.lit(int(value))
-                                if value.lstrip("-").isdigit()
-                                else F.lit(value)
-                            )
-                            df = df.withColumn(name, lit)
-                        return df
-
-                    stored = _with_parts(spark.read.parquet(leaf_str))
-                    n = (
-                        stored.filter(probe)
-                        .join(key_df, list(keys), "left_semi")
-                        .count()
-                    )
-                    if n == 0:
-                        continue
-
-                    def _write_kept(tmp: str, _leaf: str = leaf_str, _wp=_with_parts, _pc=part_cols) -> None:
-                        st = _wp(spark.read.parquet(_leaf))
-                        kept = st.filter(~probe).unionByName(
-                            st.filter(probe).join(key_df, list(keys), "left_anti")
-                        )
-                        (
-                            kept.drop(*[name for name, _ in _pc])
-                            .sortWithinPartitions(*SORT_KEY)
-                            .write.mode("overwrite")
-                            .parquet(tmp)
-                        )
-
-                    if crash_safe_rewrite(spark, leaf_str, _write_kept):
-                        replaced[rel] = n
+            replaced = _rewrite_matching(
+                spark,
+                path,
+                lambda st: st.filter(probe).join(key_df, list(keys), "left_semi"),
+                lambda st: st.filter(~probe).unionByName(
+                    st.filter(probe).join(key_df, list(keys), "left_anti")
+                ),
+            )
         write_fact(updates, path)
         return replaced
     finally:
@@ -406,52 +363,37 @@ def ttl_expire(spark: SparkSession, path: str, older_than: str) -> dict[str, obj
       predicate, so only that month's partitions are scanned and
       rewritten through the crash-safe swap.
 
-    Idempotent: re-running after any crash converges (leftover trash
-    asides are swept first, already-dropped months are gone, the
-    boundary delete is delete_fact's no-op on zero matches). Returns
+    Idempotent: re-running after any crash converges (the leaf walk
+    sweeps leftover trash asides before the boundary delete runs,
+    already-dropped months are gone, the boundary delete is
+    delete_fact's no-op on zero matches). A trash remnant left with
+    only ``_``/``.`` metadata files is not a leaf and stays; readers
+    ignore it like any directory without data files. Returns
     ``{"dropped": [rel dirs], "boundary": {rel dir: rows deleted}}``.
     QUIESCENT POINT ONLY, like every in-place rewrite here.
     """
-    from ..streaming.store import _require_atomic_rename
+    from ..streaming.store import _require_atomic_rename, hadoop_fs
 
     cutoff_month = int(older_than[:7].replace("-", ""))
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    base = jvm.org.apache.hadoop.fs.Path(path)
-    fs = base.getFileSystem(conf)
-    if not fs.exists(base):
-        return {"dropped": [], "boundary": {}}
-    base_q = fs.makeQualified(base).toString()
-
-    # recovery: finish any interrupted drop (the rename committed the
-    # drop; the delete just reclaims space)
-    stack, trash = [base], []
-    while stack:
-        p = stack.pop()
-        for s in fs.listStatus(p):
-            if not s.isDirectory():
-                continue
-            if s.getPath().getName().endswith(TTL_TRASH_SUFFIX):
-                trash.append(s.getPath())
-            else:
-                stack.append(s.getPath())
-    for t in trash:
-        fs.delete(t, True)
-
+    fs, _ = hadoop_fs(spark, path)
+    Path = spark._jvm.org.apache.hadoop.fs.Path
     dropped: list[str] = []
-    for leaf in _leaf_partition_dirs(fs, jvm, path):
-        leaf_q = fs.makeQualified(leaf).toString()
-        rel = leaf_q[len(base_q):].lstrip("/")
+    for leaf, rel, _ in _leaf_partitions(spark, path):
+        if leaf.endswith(TTL_TRASH_SUFFIX):
+            # recovery: finish an interrupted drop (the rename
+            # committed the drop; the delete just reclaims space)
+            fs.delete(Path(leaf), True)
+            continue
         month = None
         for seg in rel.split("/"):
             if seg.startswith(f"{MONTH_COL}="):
                 month = int(seg.split("=", 1)[1])
         if month is None or month >= cutoff_month:
             continue
-        _require_atomic_rename(fs, leaf_q)
-        aside = jvm.org.apache.hadoop.fs.Path(leaf_q + TTL_TRASH_SUFFIX)
-        if not fs.rename(leaf, aside):
-            raise OSError(f"ttl_expire: rename failed for {leaf_q}")
+        _require_atomic_rename(fs, leaf)
+        aside = Path(leaf + TTL_TRASH_SUFFIX)
+        if not fs.rename(Path(leaf), aside):
+            raise OSError(f"ttl_expire: rename failed for {leaf}")
         fs.delete(aside, True)
         dropped.append(rel)
 
@@ -479,42 +421,25 @@ def table_parts(spark: SparkSession, path: str) -> DataFrame:
     equivalent runs against the catalog/manifest layer; the contract
     (partition -> files/bytes/rows) is the same.
     """
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    base = jvm.org.apache.hadoop.fs.Path(path)
-    fs = base.getFileSystem(conf)
     rows: list[tuple] = []
-    if fs.exists(base):
-        base_q = fs.makeQualified(base).toString()
-        local = base_q.startswith("file:")
-        for leaf in _leaf_partition_dirs(fs, jvm, path):
-            leaf_q = fs.makeQualified(leaf).toString()
-            rel = leaf_q[len(base_q):].lstrip("/")
-            files = [
-                s
-                for s in fs.listStatus(leaf)
-                if not s.isDirectory()
-                and not s.getPath().getName().startswith(("_", "."))
-            ]
-            n_rows: int | None = None
-            if local:
-                import pyarrow.parquet as pq
+    for leaf, rel, files in _leaf_partitions(spark, path):
+        n_rows: int | None = None
+        if leaf.startswith("file:"):
+            import pyarrow.parquet as pq
 
-                n_rows = sum(
-                    pq.ParquetFile(
-                        s.getPath().toUri().getPath()
-                    ).metadata.num_rows
-                    for s in files
-                )
-            rows.append(
-                (
-                    rel,
-                    len(files),
-                    sum(s.getLen() for s in files),
-                    n_rows,
-                    max((s.getModificationTime() for s in files), default=0) // 1000,
-                )
+            n_rows = sum(
+                pq.ParquetFile(s.getPath().toUri().getPath()).metadata.num_rows
+                for s in files
             )
+        rows.append(
+            (
+                rel,
+                len(files),
+                sum(s.getLen() for s in files),
+                n_rows,
+                max((s.getModificationTime() for s in files), default=0) // 1000,
+            )
+        )
     return spark.createDataFrame(
         rows,
         "partition string, n_files bigint, bytes bigint, rows bigint, "

@@ -72,6 +72,7 @@ from ..operators.dedup import (
 )
 from .lsh_candidates import BAND_BUCKET_CAP, vs_store_pairs, within_batch_pairs
 from .store import (
+    StageClock,
     append_partition,
     checkpoint_run_id,
     compact_tables,
@@ -146,15 +147,7 @@ def dedup_ingest_batch(
     + the three signature-store appends), ``pairs_write`` (the
     provenance log append). Keys += across batches.
     """
-    import time as _time
-
     from pyspark.sql import Window
-
-    def _mark(key: str, t0: float) -> float:
-        now = _time.perf_counter()
-        if stage_times is not None:
-            stage_times[key] = stage_times.get(key, 0.0) + (now - t0)
-        return now
 
     spark = batch.sparkSession
     verify_scheme_store_run(spark, store_dir, run_id)
@@ -300,9 +293,9 @@ def dedup_ingest_batch(
                 # pre-batch store), then index from a RE-READ of the
                 # written files: their lineage is a file scan, immune
                 # to both the store mutation and cache eviction.
-                _t = _time.perf_counter()
+                clock = StageClock(stage_times)
                 _append(survivors, survivors_dir)
-                _t = _mark("sign_join_survivors", _t)
+                clock.mark("sign_join_survivors")
                 # only THIS batch's partition: a re-delivered doc_id
                 # surviving in an older partition must not cause the
                 # current (dropped) copy to be re-indexed
@@ -319,7 +312,7 @@ def dedup_ingest_batch(
                     shorts.join(written, "doc_id", "left_semi"),
                     os.path.join(store_dir, "shorts"),
                 )
-                _t = _mark("index_write", _t)
+                clock.mark("index_write")
                 if pairs_dir is not None:
                     # safe to evaluate AFTER the store writes: every
                     # stored_* read excludes this batch's partitions,
@@ -339,7 +332,7 @@ def dedup_ingest_batch(
                         .distinct()
                     )
                     _append(pairs, pairs_dir)
-                    _mark("pairs_write", _t)
+                    clock.mark("pairs_write")
             finally:
                 pairs_vs_store.unpersist()
                 pairs_in_batch.unpersist()

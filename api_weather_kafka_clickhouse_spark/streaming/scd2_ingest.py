@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from .store import (
+    StageClock,
     append_partition,
     checkpoint_run_id,
     ensure_store_scheme,
@@ -152,15 +153,7 @@ def scd2_ingest_batch(
     EXECUTE at the closed-intervals append because the plan is lazy),
     ``heads_write`` and ``late_write`` (the two remaining appends,
     served from the persisted tagged/adj frames)."""
-    import time as _time
-
     from pyspark.sql import Window
-
-    def _mark(key: str, t0: float) -> float:
-        now = _time.perf_counter()
-        if stage_times is not None:
-            stage_times[key] = stage_times.get(key, 0.0) + (now - t0)
-        return now
 
     spark = events.sparkSession
     verify_scheme_store_run(spark, store_dir, run_id)
@@ -311,17 +304,17 @@ def scd2_ingest_batch(
         )
 
         try:
-            _t = _time.perf_counter()
+            clock = StageClock(stage_times)
             append_partition(
                 closed_from_head.unionByName(closed_islands),
                 os.path.join(store_dir, "closed"),
                 batch_id,
             )
-            _t = _mark("fold_closed_write", _t)
+            clock.mark("fold_closed_write")
             append_partition(new_heads, os.path.join(store_dir, "heads"), batch_id)
-            _t = _mark("heads_write", _t)
+            clock.mark("heads_write")
             append_partition(late, os.path.join(store_dir, "late"), batch_id)
-            _mark("late_write", _t)
+            clock.mark("late_write")
         finally:
             adj.unpersist()
             tagged.unpersist()

@@ -1,7 +1,20 @@
-"""Shared persistent-store machinery for the incremental ingest
-modules (``dedup_ingest`` for text, ``embedding_ingest`` for
-vectors): batch-partitioned parquet tables with replay-aware reads
-and crash-safe compaction.
+"""Shared persistent-store machinery: the one place that touches the
+Hadoop FileSystem API and the one crash-safe directory swap.
+
+- ``hadoop_fs`` is the single FileSystem lookup every module uses
+  (the ingest stores here, ``cluster_store``, ``rollup``,
+  ``sources/sink`` and ``plans/stage``), so hdfs:// and s3a:// paths
+  resolve the same way local ones do.
+- ``crash_safe_rewrite`` is the tmp → marker → aside → swap protocol
+  behind store compaction (``compact_tables``), the weather rollup's
+  ``compact_rollup`` and the warehouse's leaf-partition rewrites
+  (``sources/sink``: optimize, delete, upsert, TTL boundary).
+- Driver-side marker files (scheme, run id, high-water) are read and
+  written here without a Spark job.
+
+The incremental ingest modules (``dedup_ingest`` for text,
+``embedding_ingest`` for vectors, and the ER/SCD2/aggregate stores)
+keep batch-partitioned parquet tables with replay-aware reads.
 
 Layout contract (per table): plain parquet, Hive-partitioned by the
 ingest batch id (``ingest_batch=<n>``), so a replayed micro-batch
@@ -14,6 +27,7 @@ into a single ``ingest_batch=-1`` partition at a quiescent point.
 from __future__ import annotations
 
 import os
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -74,14 +88,21 @@ def _require_atomic_rename(fs, path: str) -> None:  # noqa: ANN001
         )
 
 
+def hadoop_fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path`` — the one FileSystem lookup
+    in the package. The FileSystem comes from the session's Hadoop
+    configuration, so every scheme the session can read resolves."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
+
+
 def fs_exists(spark: SparkSession, path: str) -> bool:
     """Existence check through the Hadoop FS API, so hdfs:///s3a://
     stores work identically to local paths (an os.path.isdir gate
     would silently treat every remote store as empty — no dedup, no
     error)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
+    fs, p = hadoop_fs(spark, path)
+    return fs.exists(p)
 
 
 def read_small_text(spark: SparkSession, path: str) -> str | None:
@@ -91,10 +112,7 @@ def read_small_text(spark: SparkSession, path: str) -> str | None:
     to re-read ~50 bytes is measurable scheduling overhead. Returns
     None when the path does not exist; concatenates part files in
     name order (the layout spark.write.text produces)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(conf)
+    fs, p = hadoop_fs(spark, path)
     if not fs.exists(p):
         return None
     if fs.getFileStatus(p).isDirectory():
@@ -113,7 +131,7 @@ def read_small_text(spark: SparkSession, path: str) -> str | None:
     for f in files:
         stream = fs.open(f)
         try:
-            out.append(jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8"))
+            out.append(spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8"))
         finally:
             stream.close()
     return "".join(out)
@@ -129,33 +147,40 @@ def write_small_text(spark: SparkSession, path: str, content: str) -> None:
     ``read_small_text`` reads via its single-file branch; stores
     written by the old directory-style writer remain readable.
 
-    Crash atomicity (round-16, round-15 ADVICE): the content is
-    written to a ``<path>.__tmp`` sibling and renamed over the target
-    — atomic on the POSIX/HDFS/ABFS filesystems the store layer's
-    compaction protocol already requires. A bare ``fs.create(p,
-    True)`` truncates in place, so a crash mid-write left an EMPTY
-    marker: an empty high-water marker reads back as None in
-    ``read_high_water``, silently disabling
-    ``guard_replay_after_compaction``'s double-count refusal."""
+    Crash safety: the content is written to a ``<path>.__tmp``
+    sibling, then moved over the target by ONE
+    ``FileContext.rename(…, OVERWRITE)`` call, so a crash mid-write
+    never leaves a truncated/empty marker (an empty high-water marker
+    reads back as None in ``read_high_water``, silently disabling
+    ``guard_replay_after_compaction``'s double-count refusal). Where
+    the filesystem implements overwrite-rename natively (HDFS) the
+    replace is atomic. Elsewhere, the local filesystem included,
+    Hadoop emulates it inside that one call as delete-then-rename:
+    the marker can still go missing, but only for the JVM-internal
+    gap between the two, not across two driver round trips. Only an
+    old-layout marker — a DIRECTORY of part files, which no rename
+    can overwrite — is deleted from here first.
+
+    Single writer: each marker has one writer at a time (the store's
+    one stream or batch driver). Two concurrent writers would share
+    the ``.__tmp`` sibling."""
+    fs, p = hadoop_fs(spark, path)
     jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    p = jvm.org.apache.hadoop.fs.Path(path)
     tmp = jvm.org.apache.hadoop.fs.Path(path + ".__tmp")
-    fs = p.getFileSystem(conf)
     stream = fs.create(tmp, True)
     try:
         stream.write(bytearray(content.encode("utf-8")))
     finally:
         stream.close()
-    # an old-layout marker is a DIRECTORY of part files at this path;
-    # rename cannot replace a directory, so clear it first (the window
-    # between delete and rename can lose the OLD value on a crash, but
-    # never leaves a truncated/empty file — the failure read_high_water
-    # cannot distinguish from "no marker yet")
-    if fs.exists(p):
+    if fs.isDirectory(p):
         fs.delete(p, True)
-    if not fs.rename(tmp, p):
-        raise IOError(f"write_small_text: rename {path}.__tmp -> {path} failed")
+    fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
+        fs.getUri(), spark._jsc.hadoopConfiguration()
+    )
+    rename_opt = getattr(jvm.org.apache.hadoop.fs, "Options$Rename")
+    opts = spark.sparkContext._gateway.new_array(rename_opt, 1)
+    opts[0] = rename_opt.OVERWRITE
+    fc.rename(tmp, p, opts)
 
 
 def read_store(
@@ -286,25 +311,28 @@ def crash_safe_rewrite(spark: SparkSession, path: str, write_tmp) -> bool:
     """Rewrite the directory at ``path`` in place via the
     tmp → marker → aside → swap protocol whose steps, recovery cases,
     and filesystem requirements are documented (and proven) in the
-    compact_tables docstring above. compact_tables delegates here;
-    sources/sink.optimize_fact shares the same protocol for warehouse
-    partition rewrites instead of duplicating it.
+    compact_tables docstring above. compact_tables delegates here, as
+    do rollup.compact_rollup and every warehouse leaf-partition
+    rewrite in sources/sink.
+
+    Recovery never prefers a marker-complete tmp over an existing
+    live copy without an aside (crash between steps 2 and 3): live
+    may have received new batch partitions since that tmp was
+    written, so tmp is discarded and the rewrite redone from live.
 
     ``write_tmp(tmp_path)`` must produce the COMPLETE rewritten copy
     at ``tmp_path`` before returning. Returns True when a rewrite
     happened, False when ``path`` does not exist (after recovery of
     any previous interrupted rewrite of the same path, so
     re-invocation always converges)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
+    Path = spark._jvm.org.apache.hadoop.fs.Path
     tmp = path + "__compact_tmp"
     aside = path + "__compact_old"
-    p_live = jvm.org.apache.hadoop.fs.Path(path)
-    p_tmp = jvm.org.apache.hadoop.fs.Path(tmp)
-    p_aside = jvm.org.apache.hadoop.fs.Path(aside)
-    p_tmp_marker = jvm.org.apache.hadoop.fs.Path(os.path.join(tmp, COMPACT_MARKER))
-    p_live_marker = jvm.org.apache.hadoop.fs.Path(os.path.join(path, COMPACT_MARKER))
-    fs = p_live.getFileSystem(conf)
+    fs, p_live = hadoop_fs(spark, path)
+    p_tmp = Path(tmp)
+    p_aside = Path(aside)
+    p_tmp_marker = Path(os.path.join(tmp, COMPACT_MARKER))
+    p_live_marker = Path(os.path.join(path, COMPACT_MARKER))
     _require_atomic_rename(fs, path)
 
     # -- recovery of a previous crashed run (protocol above) --
@@ -348,7 +376,7 @@ def crash_safe_rewrite(spark: SparkSession, path: str, write_tmp) -> bool:
             if not fs.rename(p_aside, p_live):
                 raise IOError(f"compact recovery: rename {aside} -> {path} failed")
 
-    if not fs_exists(spark, path):
+    if not fs.exists(p_live):
         return False
     write_tmp(tmp)
     fs.create(p_tmp_marker, True).close()  # step 2: tmp is complete
@@ -534,3 +562,24 @@ def guard_replay_after_compaction(
                 "part. Compaction must only run at a quiescent point with the "
                 "checkpoint intact — rebuild the store or restore the checkpoint."
             )
+
+
+# --- per-batch stage timing -----------------------------------------
+
+
+class StageClock:
+    """Wall-clock split of one ingest batch body into named stages:
+    each ``mark(key)`` adds the seconds since the previous mark (or
+    construction) to ``stage_times[key]``, so keys accumulate across
+    batches. ``stage_times=None`` records nothing. The ingest chains'
+    ``stage_times`` keyword feeds this; bench.py reads the keys."""
+
+    def __init__(self, stage_times: dict[str, float] | None) -> None:
+        self.stage_times = stage_times
+        self.t0 = time.perf_counter()
+
+    def mark(self, key: str) -> None:
+        now = time.perf_counter()
+        if self.stage_times is not None:
+            self.stage_times[key] = self.stage_times.get(key, 0.0) + (now - self.t0)
+        self.t0 = now

@@ -5,11 +5,14 @@ batch must not double-count (dynamic overwrite by batch_id)."""
 from __future__ import annotations
 
 import json
+import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
 from api_weather_kafka_clickhouse_spark.streaming import pipeline, rollup
+from api_weather_kafka_clickhouse_spark.streaming import store as store_mod
 from tests.test_ingest_flatten import FULL_PAYLOAD, SPARSE_PAYLOAD
 
 
@@ -117,3 +120,32 @@ def test_rollup_replay_is_idempotent(spark, stream_dir, tmp_path):
     merged = _collect_map(rollup.read_rollup(spark, rp))
     assert len(merged) == len(first) + 1
     assert any(k[1] == "Third City" for k in merged)
+
+
+def test_rollup_compaction_recovers_mid_swap_crash(spark, stream_dir, tmp_path, monkeypatch):
+    """A crash between the compaction swap's two renames leaves live
+    set aside and the marked compacted copy not yet renamed in. The
+    next compact_rollup must restore the rollup, not fail on (or
+    compact) a missing live path; on a copy+delete-rename filesystem
+    it must refuse before touching either copy."""
+    rp, ck = str(tmp_path / "rollup"), str(tmp_path / "ck")
+    q = rollup.start_rollup(
+        pipeline.transform(pipeline.read_stream_json_files(spark, str(stream_dir))), rp, ck
+    )
+    q.awaitTermination(120)
+    before = _collect_map(rollup.read_rollup(spark, rp))
+
+    tmp, aside = rp + "__compact_tmp", rp + "__compact_old"
+    shutil.copytree(rp, tmp)
+    open(os.path.join(tmp, store_mod.COMPACT_MARKER), "w").close()
+    os.rename(rp, aside)
+
+    with monkeypatch.context() as m:
+        m.setattr(store_mod, "_fs_scheme", lambda fs, path: "s3a")
+        with pytest.raises(RuntimeError, match="non-atomic"):
+            rollup.compact_rollup(spark, rp, ck)
+    assert os.path.isdir(tmp) and os.path.isdir(aside) and not os.path.exists(rp)
+
+    rollup.compact_rollup(spark, rp, ck)
+    assert _collect_map(rollup.read_rollup(spark, rp)) == before
+    assert not os.path.exists(tmp) and not os.path.exists(aside)
